@@ -449,11 +449,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q53_cuckoo_prefilter(spark, sf):
         # Cuckoo-filter seen-set prefilter + authoritative exact
-        # anti-join (plans/cuckoo.filter_unseen_cuckoo, r4): the output
+        # anti-join (seen.filter_unseen with the cuckoo tagger): the output
         # must equal plain NOT IN semantics exactly — false positives
         # only ever cost an extra probe, false negatives are impossible.
         # Seen set = every third document's synthesized URL.
+        from functools import partial
+
         from crawler_tjce_spark.plans import cuckoo as ck
+        from crawler_tjce_spark.plans import seen as seenmod
 
         d = _t(spark, sf, "documents")
         u = d.select(
@@ -467,7 +470,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         seen = u.filter(F.col("doc_id") % 3 == 0)
         cf = ck.build_cuckoo(seen, "url", expected_n=20_000)
-        return ck.filter_unseen_cuckoo(u, seen, "url", cf).select("doc_id", "url")
+        tagger = partial(ck.maybe_seen_expr_cuckoo, url_col="url", cf=cf)
+        return seenmod.filter_unseen(u, seen, "url", tagger).select("doc_id", "url")
 
     q["q53_cuckoo_prefilter"] = q53_cuckoo_prefilter
 

@@ -14,6 +14,12 @@ Same contract as the bloom path: the filter is only ever a PREFILTER —
 false positives cost an extra exact anti-join probe, never drop a URL;
 false negatives are impossible for inserted-and-not-deleted keys.
 
+In the crawl runner (``seen_filter="cuckoo"``) the filter is the
+deletion-capable record that ``ttl_evict``/``requeue`` edit and resume
+reloads; the links path does not probe it and relies on the exact
+anti-join alone (the probe's Python UDF pass measured as a net loss on
+the ``recrawl_cuckoo`` benchmark).
+
 Layout — a SHARDED filter, which is what makes the build distributed:
 
 * every key belongs to exactly one shard ``h1 mod P``;
@@ -287,8 +293,10 @@ def maybe_seen_expr_cuckoo(
 ):
     """``_maybe_seen`` boolean via the vectorized cuckoo probe — same
     column contract as :func:`plans.seen.maybe_seen_expr` (True ⇒ must be
-    checked by the exact anti-join; False ⇒ definitely new). Accepts the
-    filter object (closure-shipped; test scale) or a broadcast of it."""
+    checked by the exact anti-join; False ⇒ definitely new), so
+    ``seen.filter_unseen`` takes it, partially applied, as its tagger.
+    Accepts the filter object (closure-shipped; test scale) or a
+    broadcast of it."""
     is_bc = isinstance(cf, Broadcast)
     payload = cf
 
@@ -302,28 +310,6 @@ def maybe_seen_expr_cuckoo(
     return df.withColumn(
         "_maybe_seen", probe(F.xxhash64(F.col(url_col)), F.hash(F.col(url_col)))
     )
-
-
-def filter_unseen_cuckoo(
-    candidates: DataFrame,
-    seen: DataFrame,
-    url_col: str = "url",
-    cf: CuckooFilter | Broadcast | None = None,
-    broadcast_seen: bool = False,
-) -> DataFrame:
-    """Candidates not in the seen set: cuckoo prefilter + authoritative
-    exact ``left_anti`` — drop-in parallel of ``seen.filter_unseen``
-    (incl. its dedup-only-when-broadcasting seen-side contract)."""
-    seen_urls = seen.select(url_col)
-    if broadcast_seen:
-        seen_urls = F.broadcast(seen_urls.distinct())
-    if cf is None:
-        return candidates.join(seen_urls, url_col, "left_anti")
-    tagged = maybe_seen_expr_cuckoo(candidates, url_col, cf)
-    definitely_new = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-    maybe = tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-    checked = maybe.join(seen_urls, url_col, "left_anti")
-    return definitely_new.unionByName(checked)
 
 
 def hashes_for_urls(spark, urls: list[str]) -> tuple[np.ndarray, np.ndarray]:

@@ -49,28 +49,16 @@ def _positions(h1: np.ndarray, h2: np.ndarray, m: int, k: int) -> np.ndarray:
 
 
 def build_bloom(
-    seen: DataFrame, url_col: str, expected_n: int, fpp: float = 0.01,
-    distributed: bool = False,
+    seen: DataFrame, url_col: str, expected_n: int, fpp: float = 0.01
 ) -> bytes:
     """Build the bloom bit array from a seen-URL DataFrame.
 
     JVM computes both hashes; each partition emits a partial bit array
     (Arrow batch → numpy). Empty input → all-zero array (bloom then
-    rejects everything, anti-join still authoritative).
-
-    ``distributed=False`` (default): the driver ORs the partials — one
-    array per upstream partition lands on the driver. Fine while
-    P × m/8 bytes is driver-sized (the sandbox's ~1.2 MB arrays).
-
-    ``distributed=True`` (r6, VERDICT r5 #8 — the cluster-scale merge
-    path as code, not prose): partials are OR-merged executor-side via
-    ``treeReduce``, so the driver receives exactly ONE array regardless
-    of partition count. At the documented 10^10-key/1% story the array
-    is ~12 GB — with thousands of partials the driver-merge form would
-    pull terabytes through the driver; the tree form moves each level's
-    arrays between executors and ships one result. OR is associative
-    and commutative, so both forms produce byte-identical arrays
-    (parity-pinned in tests/test_seen_broadcast.py).
+    rejects everything, anti-join still authoritative). The driver ORs
+    the partials — one array per upstream partition lands on the driver,
+    fine while P × m/8 bytes is driver-sized (~1.2 MB arrays at test
+    scale).
     """
     m, k = bloom_params(expected_n, fpp)
     hashed = seen.select(
@@ -89,22 +77,7 @@ def build_bloom(
         if any_rows:
             yield pd.DataFrame({"bits": [bits.tobytes()]})
 
-    parts_df = hashed.mapInPandas(partial, schema="bits binary")
-    if distributed:
-        import math
-
-        rdd = parts_df.rdd.map(lambda r: r["bits"])
-        n_parts = rdd.getNumPartitions()
-        if rdd.isEmpty():
-            return np.zeros(m // 8, dtype=np.uint8).tobytes()
-        depth = max(2, int(math.ceil(math.log(max(n_parts, 2), 16))))
-        return rdd.treeReduce(
-            lambda a, b: (
-                np.frombuffer(a, dtype=np.uint8) | np.frombuffer(b, dtype=np.uint8)
-            ).tobytes(),
-            depth=depth,
-        )
-    parts = parts_df.collect()
+    parts = hashed.mapInPandas(partial, schema="bits binary").collect()
     acc = np.zeros(m // 8, dtype=np.uint8)
     for row in parts:
         acc |= np.frombuffer(row["bits"], dtype=np.uint8)
@@ -145,92 +118,29 @@ def maybe_seen_expr(
     )
 
 
-def prefilter_new_rows(
+def filter_unseen(
     candidates: DataFrame,
     seen: DataFrame,
     url_col: str = "url",
     tagger=None,
     broadcast_seen: bool = False,
 ) -> DataFrame:
-    """Row-level unseen filter applied BEFORE any dedup/aggregation —
-    the links-path pushdown (VERDICT r4 #1).
-
-    ``filter_unseen`` assumes its candidates are already URL-distinct;
-    the crawl's links path used to get there with a ``groupBy(url)``
-    over EVERY exploded out-link, which at 10^8-URL waves shuffles the
-    whole discovered-link stream — dominated, in a converged crawl, by
-    links to already-seen URLs — before the filter structure has pruned
-    anything. Here the probe runs as a map-side projection over the raw
-    rows and the streams split BEFORE the shuffle:
-
-    * probe-negative rows are DEFINITELY NEW (no false negatives) and
-      flow to the caller's aggregation unchecked — in a converged crawl
-      this is the small stream;
-    * probe-positive rows reduce to a URL-ONLY ``distinct`` (narrower
-      rows than the caller's aggregate, and the dominant truly-seen
-      traffic collapses map-side) whose survivors of the authoritative
-      exact anti-join are the bloom/cuckoo FALSE POSITIVES — expected
-      ``fpp × |distinct new URLs|``, i.e. tiny — broadcast back as a
-      semi-join to recover their full rows.
-
-    Equivalence: the tag is a pure function of the URL, so every row of
-    a URL takes the same branch; output rows = candidates whose URL is
-    not in ``seen``, exactly (false positives are recovered by the
-    exact check, never dropped). What no longer happens is the seen-URL
-    traffic entering a full-width shuffle: it dies in the map-side
-    partial aggregate of a url-only distinct.
-
-    Cost note: the candidate subtree is evaluated by three consumers
-    (new stream, maybe-url distinct, false-positive recovery) — the
-    explode recomputes instead of re-reading a shuffle. That is the
-    intended trade at cluster scale (CPU-cheap recompute vs network
-    shuffle of the dominant stream); the A/B on the 20× world is
-    recorded in BENCH.md.
-
-    ``tagger``: callable df → df with a boolean ``_maybe_seen`` (the
-    bloom's :func:`maybe_seen_expr` or the cuckoo's
-    ``maybe_seen_expr_cuckoo``, partially applied). ``None`` falls back
-    to the plain exact anti-join over the raw rows (only sensible for
-    small candidate sets — the runner keeps the group-then-filter shape
-    when it has no filter structure).
-    """
-    seen_urls = seen.select(url_col)
-    if broadcast_seen:
-        seen_urls = F.broadcast(seen_urls.distinct())
-    if tagger is None:
-        return candidates.join(seen_urls, url_col, "left_anti")
-    tagged = tagger(candidates)
-    definitely_new = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-    maybe = tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-    fp_urls = (
-        maybe.select(url_col).distinct().join(seen_urls, url_col, "left_anti")
-    )
-    # fp_urls is bounded by fpp × distinct-new-URLs — broadcast is safe
-    # by construction (a saturated/undersized bloom degrades this the
-    # same way it degraded the old path's anti-join width)
-    recovered = maybe.join(F.broadcast(fp_urls), url_col, "left_semi")
-    return definitely_new.unionByName(recovered)
-
-
-def filter_unseen(
-    candidates: DataFrame,
-    seen: DataFrame,
-    url_col: str = "url",
-    bloom_bits: bytes | Broadcast | None = None,
-    bloom_k: int = 0,
-    broadcast_seen: bool = False,
-) -> DataFrame:
-    """Candidates not in the seen set: bloom prefilter (optional) +
+    """Candidates not in the seen set: filter probe (optional) +
     authoritative exact ``left_anti``.
 
-    The definitely-new stream (bloom miss) bypasses the anti-join
-    entirely; only maybe-seen rows shuffle. Result = union of both.
+    ``tagger``: callable df → df with a boolean ``_maybe_seen`` — the
+    bloom's :func:`maybe_seen_expr` or the cuckoo's
+    ``maybe_seen_expr_cuckoo``, partially applied. The definitely-new
+    stream (probe miss) bypasses the anti-join entirely; only maybe-seen
+    rows shuffle. Result = union of both. ``None`` runs the plain exact
+    anti-join. The tag is a pure function of the URL, so duplicate
+    candidate rows of one URL all take the same branch and all survive.
 
     ``broadcast_seen``: when the caller knows the seen set is small
     (early waves — the runner tracks exact seen row counts from parquet
     footers), hint a broadcast anti-join so neither side shuffles. At
     10^10 seen keys the hint stays off and the maybe-seen stream (a few
-    % of candidates after the bloom) is what shuffles.
+    % of candidates after the probe) is what shuffles.
 
     The seen side is deduplicated ONLY when broadcasting (shrinks the
     shipped table): a shuffled ``left_anti`` needs no distinct input,
@@ -241,9 +151,9 @@ def filter_unseen(
     seen_urls = seen.select(url_col)
     if broadcast_seen:
         seen_urls = F.broadcast(seen_urls.distinct())
-    if bloom_bits is None:
+    if tagger is None:
         return candidates.join(seen_urls, url_col, "left_anti")
-    tagged = maybe_seen_expr(candidates, url_col, bloom_bits, bloom_k)
+    tagged = tagger(candidates)
     definitely_new = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
     maybe = tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
     checked = maybe.join(seen_urls, url_col, "left_anti")

@@ -7,14 +7,15 @@ with distributed state:
 state                 representation
 ====================  ====================================================
 frontier              full parquet snapshot per wave (``frontier/snap=N``)
-seen set              append-only: seeds ∪ all ``discovered/wave=*``
-                      partitions (never rewritten — at 10^10 keys a
-                      rewrite-per-wave would be O(waves·|seen|) I/O);
-                      plus, by default (``seen_store="bucketed"``, r6),
-                      a catalog parquet index CLUSTERED BY (url) so the
-                      exact anti-join reads the seen side
-                      pre-partitioned and only candidates shuffle;
-                      plus a driver-held bloom bit array as prefilter,
+seen set              append-only catalog parquet index ``seen_idx``
+                      CLUSTERED BY (url), PARTITIONED BY (src, wave):
+                      seeds, each wave's discovered URLs and requeues
+                      (never rewritten — at 10^10 keys a rewrite-per-
+                      wave would be O(waves·|seen|) I/O); the exact
+                      anti-join reads it pre-partitioned, so only
+                      candidates shuffle. Plus a driver-held filter
+                      (bloom prefilter on the links path, or the
+                      deletion-capable cuckoo for TTL re-crawl),
                       persisted per wave for resume
 visit log (ordem)     append-only ``visits/wave=N`` partitions
 payload               append-only ``payload/wave=N`` with lineage cols
@@ -64,6 +65,7 @@ deterministic given the committed state).
 
 from __future__ import annotations
 
+import functools
 import os
 import threading
 import time
@@ -90,8 +92,7 @@ FRONTIER_COLS = ["url", "host", "depth", "discovered_wave", "salient"]
 # ~0.1-0.35 s of pure driver latency in the multi-wave regime, plus
 # one inside each group that re-reads its own write); the runner
 # wrote these files itself, so the schemas are known statically and
-# inference buys nothing. Partial schemas (``_SEEN_ENTRY_SCHEMA``)
-# are legal for parquet and double as read-side column pruning.
+# inference buys nothing.
 _FRONTIER_SCHEMA = (
     "url string, host string, depth int, discovered_wave int, salient boolean"
 )
@@ -100,7 +101,6 @@ _VISITS_SCHEMA = _FRONTIER_SCHEMA + (
     " backoff_total_s int, wave int"
 )
 _DISCOVERED_SCHEMA = _FRONTIER_SCHEMA + ", robots_ok boolean, wave int"
-_SEEN_ENTRY_SCHEMA = "url string, wave int"
 
 
 class CrawlRunner:
@@ -110,7 +110,6 @@ class CrawlRunner:
         world_dir: str,
         store_root: str,
         max_waves: int = 50,
-        use_bloom: bool = True,
         bloom_expected: int = 1_000_000,
         bloom_fpp: float = 0.01,
         salt_buckets: int = 16,
@@ -121,73 +120,33 @@ class CrawlRunner:
         flaky_fetch: bool = False,
         flaky_share: int = 10,
         flaky_fail_pct: int = 40,
-        adaptive_bookkeeping: bool = True,
         robots_literal_max_hosts: int = 4096,
-        seen_filter: str | None = None,
-        links_prefilter: bool = False,
+        seen_filter: str = "bloom",
         cuckoo_shards: int = 32,
-        seen_store: str = "bucketed",
         seen_buckets: int = 32,
     ):
         self.spark = spark
-        # True (default) keeps the session's AQE setting for the crawl
-        # loop. MEASURED (r4, interleaved A/B at local[8], 4 small
-        # waves, clock-normalized): AQE ON 34.1/34.4 s vs OFF 40.2/36.5
-        # s — AQE's runtime coalescing of the small bookkeeping shuffles
-        # saves more task-scheduling overhead than its per-exchange
-        # stage materialization costs, so the r3-VERDICT hypothesis
-        # ("AQE off for the tiny pick jobs") is rejected by data. False
-        # turns AQE off for the loop and statically sizes
-        # spark.sql.shuffle.partitions to 2×defaultParallelism instead.
-        self.adaptive_bookkeeping = adaptive_bookkeeping
         self.world_dir = world_dir
         self.store = SnapshotStore(store_root)
         self.max_waves = max_waves
         # seen-filter selection (VERDICT r4 #7): "bloom" (append-only,
-        # cheapest), "cuckoo" (deletion-capable — TTL eviction / forced
-        # re-crawl via ttl_evict), or "none". `use_bloom` kept as the
-        # legacy switch: seen_filter=None derives from it.
-        self.seen_filter = (
-            seen_filter if seen_filter is not None else ("bloom" if use_bloom else "none")
-        )
-        if self.seen_filter not in ("bloom", "cuckoo", "none"):
+        # cheapest; probed on the links path), "cuckoo" (deletion-capable
+        # — TTL eviction / forced re-crawl via ttl_evict; the links path
+        # relies on the exact anti-join alone), or "none".
+        if seen_filter not in ("bloom", "cuckoo", "none"):
             raise ValueError(f"seen_filter must be bloom|cuckoo|none, got {seen_filter!r}")
-        self.use_bloom = self.seen_filter == "bloom"
-        # probe the bloom/cuckoo BEFORE the links groupBy shuffle
-        # (VERDICT r4 #1 suggestion). Implemented, parity-tested, and
-        # A/B-MEASURED on the 20×/1M-page world — and REJECTED as the
-        # default (the AQE-off precedent): ON tripled links core-s
-        # (probe+explode recomputed per consumer: 249.6 vs 59.8 run_s)
-        # and even shuffled more (338 vs 252 MB), because exactness
-        # forces every distinct maybe-seen URL through a shuffle anyway
-        # — a bloom/cuckoo positive is only "maybe", so "definitely-seen
-        # links never enter the shuffle" is unachievable without
-        # dropping false-positive (i.e. genuinely new) URLs. The probe
-        # stays AFTER the URL-dedup groupBy, where it runs once over
-        # deduped rows. Opt-in regime that can still win: extreme
-        # per-partition link duplication (boilerplate nav links), where
-        # the maybe side's url-only distinct collapses map-side. See
-        # bench_artifacts/bigworld.json for the recorded A/B.
-        self.links_prefilter = links_prefilter
+        self.seen_filter = seen_filter
         self.cuckoo_shards = cuckoo_shards
-        # Bucketed seen store (r6, VERDICT r5 #1): the exact anti-join's
-        # seen side used to hash-exchange the ENTIRE seen history every
-        # wave once it outgrew broadcast — O(seen) shuffle per wave, the
-        # engine's last named 10^10-key cost. "bucketed" maintains a
-        # catalog parquet table CLUSTERED BY (url) INTO ``seen_buckets``
-        # BUCKETS, PARTITIONED BY (src, wave): the per-wave insert moves
-        # only that wave's discovered URLs (one small exchange, one file
-        # per bucket), and every seen-side read scans pre-partitioned
+        # Bucketed seen store (r6, VERDICT r5 #1): a catalog parquet
+        # table CLUSTERED BY (url) INTO ``seen_buckets`` BUCKETS,
+        # PARTITIONED BY (src, wave). The per-wave insert moves only that
+        # wave's discovered URLs (one small exchange, one file per
+        # bucket), and every seen-side read scans pre-partitioned
         # (``Bucketed: true`` — only the CANDIDATE side exchanges in the
         # left_anti). Partitions: src ∈ {s,d,r} × wave, so a crash-replay
         # dynamically overwrites exactly (d, wave) — idempotent — and
-        # wave-pruning happens on catalog partitions (the replayed
-        # wave's files are never listed, same property as the r5
-        # path-level pruning). "paths" keeps the r5 per-wave path-union
-        # read (the seen side re-shuffles per wave once past broadcast).
-        if seen_store not in ("bucketed", "paths"):
-            raise ValueError(f"seen_store must be bucketed|paths, got {seen_store!r}")
-        self.seen_store = seen_store
+        # wave-pruning happens on catalog partitions (the replayed wave's
+        # files are never listed).
         self.seen_buckets = seen_buckets
         import hashlib
 
@@ -219,9 +178,8 @@ class CrawlRunner:
         # documented 10^8-key mid-scale). Refreshed by _bloom_publish.
         self._bloom_bc = None
         self._bloom_k = 0
-        # cuckoo state (seen_filter="cuckoo"): driver handle + broadcast
+        # cuckoo state (seen_filter="cuckoo"): driver-held filter
         self._cuckoo = None
-        self._cuckoo_bc = None
         # cross-wave payload pipeline: (thread, err_list, wave) of the
         # in-flight payload job — see _drain_payload
         self._payload_pending: tuple | None = None
@@ -287,24 +245,36 @@ class CrawlRunner:
         seen-index table. The catalog entry is session-local (in-memory
         catalog); the FILES are the durable state under the store root,
         so a resume in a fresh session re-creates the table over the
-        existing location and recovers its partitions (MSCK)."""
-        if self.seen_store != "bucketed":
-            return
+        existing location and recovers its partitions (MSCK).
+
+        Outside ``drop`` the index files must exist: a committed store
+        without them has lost its seen set, and carrying on over an empty
+        index would re-visit everything — raise instead.
+
+        The table carries ``partitionOverwriteMode=dynamic`` as a table
+        option, so an overwrite insert replaces only the partitions it
+        writes whatever the session's setting (the writer-level option
+        is ignored by ``insertInto``)."""
         name = self._seen_table
         if drop:
             import shutil
 
             self.spark.sql(f"DROP TABLE IF EXISTS {name}")
             shutil.rmtree(self._seen_index_path, ignore_errors=True)
+        elif not os.path.isdir(self._seen_index_path):
+            raise RuntimeError(
+                f"seen index missing at {self._seen_index_path}: the committed "
+                "store cannot resume without its seen set; rerun with resume=False"
+            )
         if not self.spark.catalog.tableExists(name):
-            existed = os.path.isdir(self._seen_index_path)
             self.spark.sql(
                 f"CREATE TABLE {name} (url STRING, src STRING, wave INT) "
-                f"USING parquet PARTITIONED BY (src, wave) "
+                f"USING parquet OPTIONS (partitionOverwriteMode 'dynamic') "
+                f"PARTITIONED BY (src, wave) "
                 f"CLUSTERED BY (url) INTO {self.seen_buckets} BUCKETS "
                 f"LOCATION '{self._seen_index_path}'"
             )
-            if existed:
+            if not drop:  # over existing files: recover their partitions
                 self.spark.sql(f"MSCK REPAIR TABLE {name}")
 
     def _seen_idx_insert(
@@ -314,9 +284,9 @@ class CrawlRunner:
 
         The pre-insert ``repartition(B, url)`` uses the same Murmur3
         bucket function as the table spec, so each task holds exactly
-        one bucket's rows → one file per bucket per partition. With
-        dynamic partition overwrite, ``overwrite=True`` replaces only
-        the (src, wave) partitions present in this batch — the
+        one bucket's rows → one file per bucket per partition. With the
+        table's dynamic partition overwrite, ``overwrite=True`` replaces
+        only the (src, wave) partition of this batch — the
         idempotent-replay write mode."""
         (
             urls_df.select(
@@ -333,50 +303,26 @@ class CrawlRunner:
         """seen = (seeds ∪ discovered ∪ requeued)[wave ≤ upto_wave]
         − still-live evictions.
 
-        Wave pruning happens at the PATH level (explicit ``w{N}`` dirs),
-        not by scanning ``w*`` and filtering the ``wave`` column. Two
-        reasons: (a) the row filter still listed and footer-read every
-        wave's files — including the wave currently being REPLAYED after
-        a crash, whose idempotent overwrite deletes the very files its
-        own input plan had listed (FAILED_READ_FILE; surfaced by the r4
-        AQE-off change, but a latent read-own-write-target overlap all
-        along); (b) at 10^5 waves this is source-level pruning instead
-        of 10^5 footer reads per seen-join.
+        All three entry sources live in the bucketed index table; the
+        wave bound prunes catalog PARTITIONS (the replayed wave's
+        partition is never listed — a crash-replay's idempotent
+        overwrite cannot delete files its own input plan had listed),
+        the scan reports ``Bucketed: true``, and downstream url-equality
+        joins exchange ONLY their other side.
 
         Evictions (``ttl_evict``, cuckoo mode): a tombstone (url,
         evict_wave) masks every entry for that url from BEFORE the
         eviction; a later re-discovery or requeue (entry wave ≥
         evict_wave) resurrects it. The tombstone table is bounded
         (explicit eviction batches), so its mask join is a broadcast —
-        per-wave cost ~nothing.
-
-        seen_store="bucketed" (r6): all three entry sources live in the
-        bucketed index table; the wave bound prunes catalog PARTITIONS
-        (same replay-safety as the path-level pruning — the replayed
-        wave's partition is never listed), the scan reports
-        ``Bucketed: true``, and downstream url-equality joins exchange
-        ONLY their other side. The eviction mask is a broadcast join,
-        which preserves the streamed side's bucket partitioning."""
-        if self.seen_store == "bucketed":
-            self._ensure_seen_index()  # re-registers after session restart
-            entries = (
-                self.spark.table(self._seen_table)
-                .filter(F.col("wave") <= upto_wave)
-                .select("url", F.col("wave").alias("_w"))
-            )
-        else:
-            entries = self.seeds.select("url", F.lit(-1).alias("_w"))
-            for table in ("discovered", "requeued"):
-                paths = [
-                    p
-                    for w in range(0, upto_wave + 1)
-                    if os.path.exists(p := self.store.table_dir(table, w))
-                ]
-                if paths:
-                    part = self.spark.read.schema(_SEEN_ENTRY_SCHEMA).parquet(*paths)
-                    entries = entries.unionByName(
-                        part.select("url", F.col("wave").alias("_w"))
-                    )
+        per-wave cost ~nothing, and it preserves the streamed side's
+        bucket partitioning."""
+        self._ensure_seen_index()  # re-registers after session restart
+        entries = (
+            self.spark.table(self._seen_table)
+            .filter(F.col("wave") <= upto_wave)
+            .select("url", F.col("wave").alias("_w"))
+        )
         evp = os.path.join(self.store.root, "evicted")
         if os.path.isdir(evp):
             ev = (
@@ -404,8 +350,6 @@ class CrawlRunner:
             old.unpersist()
 
     def _init_bloom(self, wave: int) -> None:
-        if not self.use_bloom:
-            return
         m, k = seenmod.bloom_params(self.bloom_expected, self.bloom_fpp)
         self._bloom_k = k
         p = self._bloom_path(wave)
@@ -419,8 +363,6 @@ class CrawlRunner:
         self._bloom_publish()
 
     def _bloom_add(self, df: DataFrame, wave: int) -> None:
-        if not self.use_bloom:
-            return
         import numpy as np
 
         inc = seenmod.build_bloom(df, "url", self.bloom_expected, self.bloom_fpp)
@@ -438,14 +380,6 @@ class CrawlRunner:
     def _cuckoo_path(self, wave: int) -> str:
         return os.path.join(self.store.root, f"cuckoo_{wave}.npz")
 
-    def _cuckoo_publish(self) -> None:
-        from crawler_tjce_spark.plans import cuckoo as ckmod  # noqa: F401
-
-        old = self._cuckoo_bc
-        self._cuckoo_bc = self.spark.sparkContext.broadcast(self._cuckoo)
-        if old is not None:
-            old.unpersist()
-
     def _init_cuckoo(self, wave: int) -> None:
         from crawler_tjce_spark.plans import cuckoo as ckmod
 
@@ -456,13 +390,11 @@ class CrawlRunner:
             self._cuckoo = ckmod.build_cuckoo(
                 self._seen_df(wave - 1), "url", self.bloom_expected, self.cuckoo_shards
             )
-        self._cuckoo_publish()
 
     def _cuckoo_add(self, df: DataFrame, wave: int) -> None:
         from crawler_tjce_spark.plans import cuckoo as ckmod
 
         self._cuckoo = ckmod.insert_distributed(self._cuckoo, df.select("url"), "url")
-        self._cuckoo_publish()
         # like the bloom: persist under the wave this filter will SERVE
         ckmod.save_cuckoo(self._cuckoo, self._cuckoo_path(wave + 1))
 
@@ -478,19 +410,6 @@ class CrawlRunner:
             self._bloom_add(df, wave)
         elif self.seen_filter == "cuckoo":
             self._cuckoo_add(df, wave)
-
-    def _probe_tagger(self):
-        """df → df + ``_maybe_seen`` for the active filter, or ``None``
-        when no filter structure exists (seen_filter="none")."""
-        if self.seen_filter == "bloom":
-            bc, k = self._bloom_bc, self._bloom_k
-            return lambda df: seenmod.maybe_seen_expr(df, "url", bc, k)
-        if self.seen_filter == "cuckoo":
-            from crawler_tjce_spark.plans.cuckoo import maybe_seen_expr_cuckoo
-
-            bc = self._cuckoo_bc
-            return lambda df: maybe_seen_expr_cuckoo(df, "url", bc)
-        return None
 
     # ------------------------------------------------------------------- run
     def prepare(self, resume: bool = True) -> dict:
@@ -512,44 +431,32 @@ class CrawlRunner:
         return manifest
 
     def run_waves(self, manifest: dict) -> dict:
-        # Optional AQE-off mode for the crawl loop (see the constructor
-        # comment: measured slower than AQE-on on this workload, so OFF
-        # is opt-in; kept because a deployment with much higher
-        # driver-to-executor latency than local mode may find the
-        # opposite, and the static-shuffle-partition sizing below is the
-        # right companion setting there).
-        prior = None
         # _run_wave re-sizes spark.sql.shuffle.partitions per wave from
         # the frontier's footer row count; always restore the session's
         # setting when the loop exits so analytics queries on the same
         # session keep their configuration.
         prior_sp = self.spark.conf.get("spark.sql.shuffle.partitions")
-        if not self.adaptive_bookkeeping:
-            prior = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
-            self.spark.conf.set("spark.sql.adaptive.enabled", "false")
         try:
             while manifest["wave"] < self.max_waves and manifest["frontier_rows"] > 0:
                 manifest = self._run_wave(manifest)
             self._drain_payload(manifest)
         finally:
-            if prior is not None:
-                self.spark.conf.set("spark.sql.adaptive.enabled", prior)
             if prior_sp is not None:
                 self.spark.conf.set("spark.sql.shuffle.partitions", prior_sp)
         return manifest
 
     def _drain_side(self) -> None:
         """Join the previous wave's deferred side jobs (seen-filter
-        update, per-host metrics, duration histogram).
+        update, seen-index insert, per-host metrics, duration histogram).
 
-        These jobs have no consumer inside their own wave: the
-        bloom/cuckoo update is first read by the NEXT wave's links
-        probe, and metrics/histogram only by the manifest commit. The
-        wave loop therefore leaves them running and joins them here —
-        after the next wave's pick has been submitted (post-pick drain
-        point in ``_run_wave``) — so their job latency hides under the
-        next pick's plan-build + write instead of extending the wave
-        tail. Every manifest ``commit`` path drains first, keeping the
+        These jobs have no consumer inside their own wave: the seen
+        filter and index are first read by the NEXT wave's links step
+        (bloom probe, exact anti-join), and metrics/histogram only by
+        the manifest commit. The wave loop therefore leaves them running
+        and joins them here — after the next wave's pick has been
+        submitted (post-pick drain point in ``_run_wave``) — so their
+        job latency hides under the next pick's plan-build + write
+        instead of extending the wave tail. Every manifest ``commit`` path drains first, keeping the
         resume invariant "a committed wave is fully on disk" intact."""
         pending = self._side_pending
         if not pending:
@@ -610,10 +517,10 @@ class CrawlRunner:
         clears, persisted for resume) and a tombstone (url, evict_wave)
         masks the exact seen entries written before now. From this
         point the URLs are re-discoverable: the next fetched page that
-        links to one re-discovers it through the normal links path
-        (probe says definitely-new, exact anti-join agrees) and it is
-        re-fetched next wave. For an immediate re-fetch without waiting
-        on organic discovery, follow with :meth:`requeue`.
+        links to one re-discovers it through the normal links path (the
+        tombstone hides its seen entries from the exact anti-join) and
+        it is re-fetched next wave. For an immediate re-fetch without
+        waiting on organic discovery, follow with :meth:`requeue`.
 
         Returns the number of fingerprints actually removed. Call
         between runs (not mid-wave): state is read from and committed
@@ -632,7 +539,6 @@ class CrawlRunner:
         h1, h2 = ckmod.hashes_for_urls(self.spark, urls)
         removed = self._cuckoo.delete(h1, h2)
         ckmod.save_cuckoo(self._cuckoo, self._cuckoo_path(manifest["wave"]))
-        self._cuckoo_publish()
         ev = self.spark.createDataFrame(
             [(u, manifest["wave"]) for u in urls], "url string, evict_wave int"
         )
@@ -646,9 +552,9 @@ class CrawlRunner:
 
     def requeue(self, urls: list[str]) -> dict:
         """Re-inject URLs into the frontier for re-fetch and mark them
-        seen again (a ``requeued/w{N}`` entry resurrects them over any
-        tombstone), so the re-crawl wave's links path does not
-        double-discover them. Works in any filter mode — after a
+        seen again (an index entry under partition (r, wave) resurrects
+        them over any tombstone), so the re-crawl wave's links path does
+        not double-discover them. Works in any filter mode — after a
         ``ttl_evict`` the cuckoo gets the fingerprints re-inserted
         (driver-side; requeue batches are bounded), a bloom still
         carries them (it never forgets — harmless, they are seen again
@@ -669,14 +575,12 @@ class CrawlRunner:
                 F.lit(wave).alias("wave"),
             )
         )
-        self.store.write_wave(rq, "requeued", wave)
-        if self.seen_store == "bucketed":
-            self._ensure_seen_index()
-            # append (never overwrite): partition (r, wave) may already
-            # hold earlier requeue batches, and a wave replay must not
-            # wipe them (replay only overwrites (d, wave)); duplicate
-            # rows are harmless to seen-set semantics
-            self._seen_idx_insert(rq.select("url"), "r", wave, overwrite=False)
+        self._ensure_seen_index()
+        # append (never overwrite): partition (r, wave) may already hold
+        # earlier requeue batches, and a wave replay must not wipe them
+        # (replay only overwrites (d, wave)); duplicate rows are harmless
+        # to seen-set semantics
+        self._seen_idx_insert(rq.select("url"), "r", wave, overwrite=False)
         if self.seen_filter == "cuckoo":
             from crawler_tjce_spark.plans import cuckoo as ckmod
 
@@ -687,7 +591,6 @@ class CrawlRunner:
             if absent.any():
                 self._cuckoo.insert_hashed(h1[absent], h2[absent])
             ckmod.save_cuckoo(self._cuckoo, self._cuckoo_path(wave))
-            self._cuckoo_publish()
         # frontier = current ∪ requeued; written to a fresh snapshot path
         # (never overwrite the snapshot the plan is reading)
         from pyspark.sql import Observation
@@ -754,10 +657,9 @@ class CrawlRunner:
             )
         )
         fpath = self.store.write_full(frontier, "frontier", 0)
-        if self.seen_store == "bucketed":
-            # seed entries land in index partition (s, -1); idempotent
-            # overwrite so a bootstrap replay cannot duplicate them
-            self._seen_idx_insert(seeds.select("url"), "s", -1, overwrite=True)
+        # seed entries land in index partition (s, -1); idempotent
+        # overwrite so a bootstrap replay cannot duplicate them
+        self._seen_idx_insert(seeds.select("url"), "s", -1, overwrite=True)
         stats = obs.get
         manifest = {
             "wave": 0,
@@ -859,8 +761,8 @@ class CrawlRunner:
         _step("pick_ordem")
         # join the PREVIOUS wave's deferred side jobs only now — their
         # latency ran under this wave's pick plan-build + write. The
-        # links probe below reads the post-update seen filter, so the
-        # drain must (and does) precede the links step.
+        # links step below reads the post-update seen filter and index,
+        # so the drain must (and does) precede it.
         self._drain_side()
         _step("side_drain")
         if picked_n == 0:  # stall guard (ref crawler/crawler.py:633-639 analog)
@@ -937,33 +839,23 @@ class CrawlRunner:
             bcast_seen = self.seen_broadcast_ok(
                 manifest.get("seen_rows"), manifest.get("avg_url_bytes", 80.0)
             )
-            tagger = self._probe_tagger()
-            if self.links_prefilter and tagger is not None:
-                # seen-probe pushdown (VERDICT r4 #1): probe every raw
-                # link map-side and drop definitely-seen traffic BEFORE
-                # the attribution groupBy — in a converged crawl the
-                # overwhelming majority of discovered links never enter
-                # the shuffle (they collapse in a url-only distinct on
-                # the maybe side; exact anti-join stays authoritative,
-                # see seen.prefilter_new_rows).
-                new_rows = seenmod.prefilter_new_rows(
-                    raw_links, seen, "url", tagger, broadcast_seen=bcast_seen
+            links = raw_links.groupBy("url").agg(
+                F.min_by("parent_depth", "parent_ordem").alias("parent_depth")
+            )
+            # the probe runs AFTER the URL-dedup groupBy, once over deduped
+            # rows; only the bloom is probed (the cuckoo's probe pass
+            # measured slower than the exact anti-join alone)
+            tagger = (
+                functools.partial(
+                    seenmod.maybe_seen_expr, url_col="url",
+                    bloom_bits=self._bloom_bc, k=self._bloom_k,
                 )
-                new_links = new_rows.groupBy("url").agg(
-                    F.min_by("parent_depth", "parent_ordem").alias("parent_depth")
-                )
-            else:
-                links = raw_links.groupBy("url").agg(
-                    F.min_by("parent_depth", "parent_ordem").alias("parent_depth")
-                )
-                new_links = seenmod.filter_unseen(
-                    links,
-                    seen,
-                    "url",
-                    self._bloom_bc if self.seen_filter == "bloom" else None,
-                    self._bloom_k,
-                    broadcast_seen=bcast_seen,
-                )
+                if self.seen_filter == "bloom"
+                else None
+            )
+            new_links = seenmod.filter_unseen(
+                links, seen, "url", tagger, broadcast_seen=bcast_seen
+            )
             discovered = self._with_robots(
                 new_links.select(
                     "url",
@@ -993,14 +885,14 @@ class CrawlRunner:
 
         # Everything below depends only on the just-committed discovered
         # partition (+ the picked checkpoint) and NOT on each other — run
-        # the three jobs concurrently (FAIR scheduler): bloom build,
-        # per-host metrics, next-frontier write. Only the FRONTIER job is
-        # joined in-wave (the next pick reads its path/row-count); the
-        # bloom and metrics joins are DEFERRED to the next wave's
+        # the four jobs concurrently (FAIR scheduler): seen-filter update,
+        # seen-index insert, per-host metrics, next-frontier write. Only
+        # the FRONTIER job is joined in-wave (the next pick reads its
+        # path/row-count); the others are DEFERRED to the next wave's
         # post-pick drain point, so their job latency pipelines under the
-        # next pick instead of extending this wave's tail (the bloom's
-        # first consumer is the next links probe, the metrics' only
-        # consumer is the manifest commit — both after that drain).
+        # next pick instead of extending this wave's tail (filter and
+        # index are first read by the next links step, the metrics only
+        # by the manifest commit — both after that drain).
         bloom_err: list[BaseException] = []
         metrics_err: list[BaseException] = []
         frontier_err: list[BaseException] = []
@@ -1123,16 +1015,14 @@ class CrawlRunner:
         bloom_thread = threading.Thread(target=_bloom_job, daemon=True)
         metrics_thread = threading.Thread(target=_metrics_job, daemon=True)
         frontier_thread = threading.Thread(target=_frontier_job, daemon=True)
-        threads = [bloom_thread, metrics_thread, frontier_thread]
+        seen_idx_thread = threading.Thread(target=_seen_idx_job, daemon=True)
+        threads = [bloom_thread, metrics_thread, frontier_thread, seen_idx_thread]
         side = [
             (bloom_thread, bloom_err),
             (metrics_thread, metrics_err),
             (hist_thread, hist_err),
+            (seen_idx_thread, seen_idx_err),
         ]
-        if self.seen_store == "bucketed":
-            seen_idx_thread = threading.Thread(target=_seen_idx_job, daemon=True)
-            threads.append(seen_idx_thread)
-            side.append((seen_idx_thread, seen_idx_err))
         for t in threads:
             t.start()
         # register the deferred side jobs BEFORE joining the frontier

@@ -4,6 +4,8 @@ as the bloom, plus DELETION, which the bloom fundamentally cannot do."""
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pytest
 
@@ -15,6 +17,11 @@ def _urls(lo, hi):
     return [f"https://h{i % 7}.example/p/{i}" for i in range(lo, hi)]
 
 
+def _cuckoo_unseen(cands, seen, cf):
+    tagger = partial(ck.maybe_seen_expr_cuckoo, url_col="url", cf=cf)
+    return seenmod.filter_unseen(cands, seen, "url", tagger)
+
+
 @pytest.fixture(scope="module")
 def world(spark):
     seen_urls = spark.createDataFrame([(u,) for u in _urls(0, 400)], "url string")
@@ -23,18 +30,19 @@ def world(spark):
 
 
 def test_parity_with_bloom_path(spark, world):
-    """filter_unseen_cuckoo returns exactly the bloom path's (and the
-    plain anti-join's) result — false positives only ever cost an extra
-    probe, never change the output."""
+    """filter_unseen with the cuckoo tagger returns exactly the bloom
+    tagger's (and the plain anti-join's) result — false positives only
+    ever cost an extra probe, never change the output."""
     seen_urls, cands = world
     expected = {u for u in _urls(400, 700)}
 
     cf = ck.build_cuckoo(seen_urls, "url", expected_n=800)
-    got_ck = {r["url"] for r in ck.filter_unseen_cuckoo(cands, seen_urls, "url", cf).collect()}
+    got_ck = {r["url"] for r in _cuckoo_unseen(cands, seen_urls, cf).collect()}
 
     bits = seenmod.build_bloom(seen_urls, "url", expected_n=800)
     _, k = seenmod.bloom_params(800)
-    got_bl = {r["url"] for r in seenmod.filter_unseen(cands, seen_urls, "url", bits, k).collect()}
+    bloom = partial(seenmod.maybe_seen_expr, url_col="url", bloom_bits=bits, k=k)
+    got_bl = {r["url"] for r in seenmod.filter_unseen(cands, seen_urls, "url", bloom).collect()}
 
     assert got_ck == expected
     assert got_bl == expected
@@ -74,7 +82,7 @@ def test_deletion_the_bloom_cannot_do(spark, world):
     # as definitely-new against a seen-store that no longer lists them
     still_seen = spark.createDataFrame([(u,) for u in kept], "url string")
     cands = spark.createDataFrame([(u,) for u in _urls(0, 30)], "url string")
-    out = {r["url"] for r in ck.filter_unseen_cuckoo(cands, still_seen, "url", cf).collect()}
+    out = {r["url"] for r in _cuckoo_unseen(cands, still_seen, cf).collect()}
     assert out == set(evicted)
 
 
@@ -156,7 +164,7 @@ def test_empty_build_rejects_everything(spark):
     empty = spark.createDataFrame([], "url string")
     cf = ck.build_cuckoo(empty, "url", expected_n=100)
     cands = spark.createDataFrame([(u,) for u in _urls(0, 20)], "url string")
-    out = ck.filter_unseen_cuckoo(cands, empty, "url", cf)
+    out = _cuckoo_unseen(cands, empty, cf)
     assert out.count() == 20
 
 

@@ -5,6 +5,9 @@ every task binary — ~120 MB/task at the documented 10^8-key scale)."""
 
 from __future__ import annotations
 
+from functools import partial
+
+import numpy as np
 from pyspark.broadcast import Broadcast
 
 from crawler_tjce_spark.plans import seen as seenmod
@@ -20,18 +23,28 @@ def _dfs(spark):
     return seen_urls, cands
 
 
+def _bloom_tagger(bits, k):
+    return partial(seenmod.maybe_seen_expr, url_col="url", bloom_bits=bits, k=k)
+
+
 def test_broadcast_and_bytes_paths_agree(spark):
     seen_urls, cands = _dfs(spark)
     bits = seenmod.build_bloom(seen_urls, "url", expected_n=400)
     _, k = seenmod.bloom_params(400)
 
     via_bytes = set(
-        r["url"] for r in seenmod.filter_unseen(cands, seen_urls, "url", bits, k).collect()
+        r["url"]
+        for r in seenmod.filter_unseen(
+            cands, seen_urls, "url", _bloom_tagger(bits, k)
+        ).collect()
     )
     bc = spark.sparkContext.broadcast(bits)
     assert isinstance(bc, Broadcast)
     via_bc = set(
-        r["url"] for r in seenmod.filter_unseen(cands, seen_urls, "url", bc, k).collect()
+        r["url"]
+        for r in seenmod.filter_unseen(
+            cands, seen_urls, "url", _bloom_tagger(bc, k)
+        ).collect()
     )
     bc.unpersist()
 
@@ -89,15 +102,12 @@ def test_wave_shuffle_sizing_restored(spark, tmp_path):
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
-def test_prefilter_new_rows_equals_not_in(spark):
-    """Row-level pre-shuffle filter == exact NOT IN semantics for any
-    bloom state: candidates with DUPLICATE rows per url, a seen set
-    overlapping half of them, and a deliberately tiny (collision-heavy)
-    bloom — false positives must be recovered, never dropped, and
-    duplicate candidate rows must all survive for downstream
-    attribution."""
-    from crawler_tjce_spark.plans import seen as seenmod
-
+def test_filter_unseen_duplicate_rows_equals_not_in(spark):
+    """Bloom-probed filter_unseen == exact NOT IN semantics for any bloom
+    state: candidates with DUPLICATE rows per url, a seen set overlapping
+    half of them, and a deliberately tiny (collision-heavy) bloom — false
+    positives must be recovered, never dropped, and duplicate candidate
+    rows must all survive."""
     cands = spark.createDataFrame(
         [(f"https://h{i % 5}.example/p/{i % 40}", i) for i in range(120)],
         "url string, payload int",
@@ -106,15 +116,14 @@ def test_prefilter_new_rows_equals_not_in(spark):
         [(f"https://h{i % 5}.example/p/{i}",) for i in range(0, 40, 2)], "url string"
     )
     # collision-heavy bloom: 64 bits for 20 keys → many false positives
-    import numpy as np
 
     bits = seenmod.build_bloom(seen, "url", expected_n=2, fpp=0.5)
     _, k = seenmod.bloom_params(2, 0.5)
-    tagger = lambda df: seenmod.maybe_seen_expr(df, "url", bits, k)  # noqa: E731
-
     got = sorted(
         (r["url"], r["payload"])
-        for r in seenmod.prefilter_new_rows(cands, seen, "url", tagger).collect()
+        for r in seenmod.filter_unseen(
+            cands, seen, "url", _bloom_tagger(bits, k)
+        ).collect()
     )
     seen_urls = {r["url"] for r in seen.collect()}
     want = sorted(
@@ -124,16 +133,18 @@ def test_prefilter_new_rows_equals_not_in(spark):
     assert len(got) > 0 and np.frombuffer(bits, dtype=np.uint8).any()
 
 
-def test_distributed_bloom_merge_parity(spark):
-    """build_bloom(distributed=True) — the treeReduce executor-side
-    OR-merge (VERDICT r5 #8) — must produce a byte-identical array to
-    the driver merge (OR is associative+commutative), including on
-    empty input (all-zero array)."""
-    seen_urls, _ = _dfs(spark)
-    driver = seenmod.build_bloom(seen_urls, "url", expected_n=400)
-    tree = seenmod.build_bloom(seen_urls, "url", expected_n=400, distributed=True)
-    assert driver == tree
+def test_empty_seen_bloom_passes_every_candidate(spark):
+    """An empty seen set builds an all-zero bloom, so the probe tags no
+    candidate and filter_unseen returns every one of them."""
+    seen_urls, cands = _dfs(spark)
     empty = seen_urls.filter("url = 'nope'")
-    assert seenmod.build_bloom(empty, "url", 400) == seenmod.build_bloom(
-        empty, "url", 400, distributed=True
+    bits = seenmod.build_bloom(empty, "url", expected_n=400)
+    _, k = seenmod.bloom_params(400)
+    assert not np.frombuffer(bits, dtype=np.uint8).any()
+    got = sorted(
+        r["url"]
+        for r in seenmod.filter_unseen(
+            cands, empty, "url", _bloom_tagger(bits, k)
+        ).collect()
     )
+    assert got == sorted(r["url"] for r in cands.collect())

@@ -1,6 +1,10 @@
 """Cuckoo seen-filter in the wave loop + the TTL re-crawl story
-(VERDICT r4 #7), the links-path probe pushdown A/B (VERDICT r4 #1),
-and the automatic offsets-form selection (VERDICT r4 #8).
+(VERDICT r4 #7), and the automatic offsets-form selection (VERDICT r4
+#8).
+
+In cuckoo mode the filter is the deletion-capable record that
+``ttl_evict``/``requeue`` edit and resume reloads; the links path does
+not probe it and relies on the exact anti-join.
 
 The reference crawler never re-visits a URL (its seen set is
 append-only, crawler/crawler.py's visited-set semantics); TTL eviction
@@ -43,24 +47,10 @@ def _visits(runner):
 def test_cuckoo_runner_matches_reference(spark, world, ref, tmp_path):
     """seen_filter='cuckoo' is a drop-in for the bloom in the full wave
     loop: identical visit order and final seen set vs the reference
-    simulator (the filter is only ever a prefilter)."""
+    simulator (the exact anti-join decides what is new)."""
     store = str(tmp_path / "store_ck")
     runner = CrawlRunner(
         spark, world, store, max_waves=30, seen_filter="cuckoo",
-        bloom_expected=10_000,
-    )
-    runner.run(resume=False)
-    assert _visits(runner) == [(o, u) for o, u, _, _ in ref.visits]
-    assert {r["url"] for r in runner.seen_final_df().collect()} == ref.seen
-
-
-def test_links_prefilter_on_identical(spark, world, ref, tmp_path):
-    """The pre-shuffle probe pushdown (non-default: A/B-measured slower
-    on the 20× world, kept as an opt-in for duplication-heavy link
-    streams) is output-invariant: identical visits and seen set."""
-    store = str(tmp_path / "store_pre")
-    runner = CrawlRunner(
-        spark, world, store, max_waves=30, links_prefilter=True,
         bloom_expected=10_000,
     )
     runner.run(resume=False)
@@ -72,9 +62,10 @@ def test_ttl_evict_requeue_recrawls_exactly_the_stale_set(spark, world, tmp_path
     """End-to-end deletion story: crawl to completion, TTL-evict a URL,
     requeue the seed page that links to it, re-run. The re-crawl
     fetches exactly {seed, evicted}: the seed because it was requeued,
-    the evicted URL because the seed's links RE-DISCOVER it through the
-    cuckoo probe (its fingerprint was deleted) — while every other
-    link of the seed page stays blocked by the filter + exact seen."""
+    the evicted URL because the seed's links RE-DISCOVER it (its
+    tombstone hides its seen entries from the exact anti-join, and its
+    fingerprint left the cuckoo) — while every other link of the seed
+    page stays blocked by the exact seen set."""
     store = str(tmp_path / "store_ttl")
     runner = CrawlRunner(
         spark, world, store, max_waves=30, seen_filter="cuckoo",
